@@ -274,61 +274,46 @@ object Similarity {
     * table. Results are bit-identical to the inline [[ivfTopK]]:
     * centroid coordinates are rounded to 6 decimals before persisting
     * and doubles round-trip parquet exactly, so index-vs-inline cannot
-    * diverge. Stale tables/locations from a previous session (the
-    * in-memory catalog forgets them across JVMs) are dropped before
-    * the write. */
+    * diverge. Both tables are cleared first
+    * ([[graft.sources.SharedTable.clear]]), so a rebuild under the same
+    * name replaces a previous session's tables. */
   def buildIndex(
       corpus: DataFrame, name: String,
       nCentroids: Int = 16, trainN: Int = 128, iters: Int = 2,
       numBuckets: Int = 16,
       idCol: String = "vec_id", embCol: String = "embedding"): IvfIndex = {
     val spark = corpus.sparkSession
-    val centTbl = s"${name}_centroids"
-    val asgTbl = s"${name}_assigned"
-    Seq(centTbl, asgTbl).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      // A dropped-from-catalog (or never-registered) managed location
-      // blocks CREATE — clear it directly.
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    val idx = IvfIndex(s"${name}_centroids", s"${name}_assigned")
+    graft.sources.SharedTable.clear(spark,
+      Seq(idx.centroidTable, idx.assignedTable))
     val cent = trainCentroids(corpus, nCentroids, trainN, iters, idCol, embCol)
-    graft.sources.FileIO.writeWarehouseTable(cent, centTbl)
+    graft.sources.FileIO.writeWarehouseTable(cent, idx.centroidTable)
     // Assign against the PERSISTED centroids so the training chain is
     // computed exactly once (saveAsTable materialized it above).
     val assigned = assignToCentroids(
-      prep(corpus, idCol, embCol), spark.table(centTbl), idCol)
-    graft.sources.FileIO.writeBucketedTable(assigned, asgTbl, "bucket", numBuckets)
-    IvfIndex(centTbl, asgTbl)
+      prep(corpus, idCol, embCol), spark.table(idx.centroidTable), idCol)
+    graft.sources.FileIO.writeBucketedTable(assigned, idx.assignedTable,
+      "bucket", numBuckets)
+    idx
   }
 
-  /** Memoized [[buildIndex]]: reuse the persisted tables when they
-    * already exist in this session's catalog (zero jobs), build
-    * otherwise. The name keys the (corpus, params) pair — callers must
-    * not reuse a name across different corpora. */
+  /** Memoized [[buildIndex]]: a [[graft.sources.SharedTable]] family
+    * whose witness is the assigned table — reused when it already
+    * exists in this session's catalog (zero jobs), built otherwise.
+    * The name keys the (corpus, params) pair — callers must not reuse
+    * a name across different corpora. */
   def indexFor(
       corpus: DataFrame, name: String,
       nCentroids: Int = 16, trainN: Int = 128, iters: Int = 2,
       numBuckets: Int = 16,
       idCol: String = "vec_id", embCol: String = "embedding"): IvfIndex = {
-    val spark = corpus.sparkSession
     val idx = IvfIndex(s"${name}_centroids", s"${name}_assigned")
-    if (spark.catalog.tableExists(idx.centroidTable) &&
-        spark.catalog.tableExists(idx.assignedTable)) idx
-    else {
-      // Fingerprinted name (the 3-arg indexName): an absent table with
-      // same-stem siblings means the corpus was regenerated — GC the
-      // superseded generation's tables before building the new one.
-      val gen = "(.*)_f[0-9a-f]{10}$".r
-      name match {
-        case gen(stem) => dropStaleGenerations(spark, stem, name)
-        case _         => ()
-      }
+    graft.sources.SharedTable.materialize(corpus.sparkSession,
+        Seq(idx.centroidTable, idx.assignedTable)) {
       buildIndex(corpus, name, nCentroids, trainN, iters, numBuckets,
         idCol, embCol)
     }
+    idx
   }
 
   /** INCREMENTAL index APPEND — the production ingest path (the
@@ -354,15 +339,15 @@ object Similarity {
     * across appends is the caller's contract, as for any table.
     *
     * NOT for fingerprint-memoized indexes (ADVICE r13): tables named
-    * by the 3-arg [[indexName]] (stem + `_f` + corpus fingerprint,
-    * e.g. the shared "ivf" stem) have a lifecycle that assumes their
-    * contents are a PURE FUNCTION of the corpus directory —
-    * [[indexFor]] serves them memoized, [[dropStaleGenerations]]
-    * deletes superseded generations, and a fingerprint-triggered
-    * rebuild would silently DISCARD appended vectors; worse, appending
-    * to the shared stem poisons every oracle-gated consumer
-    * (q42/q47/q66/…) that treats the assigned table as exactly the
-    * corpus assignment. Appendable indexes must be built via
+    * by the 3-arg [[graft.sources.SharedTable.indexName]] (stem + `_f`
+    * + corpus fingerprint, e.g. the shared "ivf" stem) have a lifecycle
+    * that assumes their contents are a PURE FUNCTION of the corpus
+    * directory — [[indexFor]] serves them memoized,
+    * [[graft.sources.SharedTable]] deletes superseded generations, and
+    * a fingerprint-triggered rebuild would silently DISCARD appended
+    * vectors; worse, appending to the shared stem poisons every
+    * oracle-gated consumer (q42/q47/q66/…) that treats the assigned
+    * table as exactly the corpus assignment. Appendable indexes must be built via
     * [[buildIndex]] under a caller-owned name; this method rejects
     * generation-named tables loudly. */
   def appendToIndex(index: IvfIndex, batch: DataFrame,
@@ -517,7 +502,7 @@ object Similarity {
     * nCent = 16, trainN = 128, iters = 2). */
   def sharedIvfIndex(corpus: DataFrame, dir: String): IvfIndex =
     indexFor(corpus,
-      indexName(corpus.sparkSession, "ivf", dir),
+      graft.sources.SharedTable.indexName(corpus.sparkSession, "ivf", dir),
       nCentroids = 16, trainN = 128, iters = 2, numBuckets = 16)
 
   /** Approximate top-k probing a PERSISTED index — no training, no
@@ -535,118 +520,6 @@ object Similarity {
   def ivfTopK(index: IvfIndex, queries: DataFrame, k: Int): DataFrame =
     ivfTopK(index, queries, k, nprobe = 2, idCol = "vec_id",
       embCol = "embedding")
-
-  /** Catalog-safe name STEM for a data directory. Prefer the
-    * fingerprinted 3-arg overload for any table that memoizes derived
-    * data — this stem alone keys on the PATH only, so a corpus
-    * regenerated in place at the same path would be served stale
-    * frames (VERDICT r11 item 2). */
-  def indexName(prefix: String, dir: String): String =
-    prefix + "_" + dir.replaceAll("[^a-zA-Z0-9]+", "_").toLowerCase
-
-  /** Corpus-keyed table name: stem + `_f` + [[dirFingerprint]]. Any
-    * change to the directory's file listing (names, sizes, mtimes —
-    * i.e. any rewrite of the corpus) yields a NEW table name, so a
-    * session-materialized table can never silently serve a previous
-    * generation of the data. Builders should GC superseded
-    * generations via [[dropStaleGenerations]] when they build. */
-  def indexName(spark: org.apache.spark.sql.SparkSession, prefix: String,
-      dir: String): String =
-    indexName(prefix, dir) + "_f" + dirFingerprint(spark, dir)
-
-  /** Corpus-keyed name for a GROWN (append-allowed) index: stem + `_g`
-    * + fingerprint — deliberately NOT the `_f` convention
-    * [[appendToIndex]] rejects. `_f` tables are pure corpus functions
-    * served memoized by [[indexFor]]; a `_g` index is built by an
-    * explicit caller flow that owns its build→append sequence. The
-    * fingerprint still keys generations (an in-place corpus rewrite
-    * gets a fresh build; GC via `dropStaleGenerations(..., sep =
-    * "_g")`), and by the same token a rebuild DISCARDS appended rows —
-    * so a `_g` name is only safe when the appends are themselves
-    * derivable from the corpus (the q182 census replay); EXTERNAL
-    * ingest belongs under caller-owned unmanaged names or the
-    * streaming delta store. */
-  def grownIndexName(spark: org.apache.spark.sql.SparkSession,
-      prefix: String, dir: String): String =
-    indexName(prefix, dir) + "_g" + dirFingerprint(spark, dir)
-
-  /** 40-bit hex fingerprint of a data directory's RECURSIVE file
-    * listing (relative-path:length:mtime rows, sorted — no data
-    * read, one driver-side listing). Changes whenever any file under
-    * the corpus directory is added, removed, resized, or rewritten.
-    * Cost class: the same O(#files) driver-side listing every
-    * parquet scan's planning already pays — called once per memoized
-    * table lookup, never per row/partition, so it stays planning
-    * cost at 100 TB (object stores serve it as LIST pages).
-    *
-    * GRANULARITY CAVEAT (deliberate trade): the fingerprint reads NO
-    * file content, so a corpus regenerated in place with identical
-    * file names AND identical byte lengths within the filesystem's
-    * mtime resolution (1 s on many filesystems, coarser on some
-    * object stores) fingerprints the same and would be served the
-    * stale generation. Parquet writers practically never reproduce
-    * byte-identical lengths for different data (footer/dictionary
-    * encoding shift), and Spark/DuckDB's own file-listing caches make
-    * the same assumption — but a pipeline that rewrites corpora
-    * sub-second with length-stable files must mix a content etag into
-    * the listing row instead of relying on (length, mtime). */
-  def dirFingerprint(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootUri = fs.makeQualified(root).toUri
-    val rows = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(p: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(p).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else rows += s"${rootUri.relativize(st.getPath.toUri)}:" +
-          s"${st.getLen}:${st.getModificationTime}"
-      }
-    if (fs.exists(root)) walk(root)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(rows.sorted.mkString("\n").getBytes("UTF-8"))
-    md.digest().take(5).map("%02x".format(_)).mkString
-  }
-
-  /** Drop every catalog table of an earlier corpus generation: names
-    * starting with `stem + "_f"` that do not belong to the current
-    * fingerprint. Called from build paths only (a build means the
-    * current generation's table was absent, so siblings are garbage
-    * from a regenerated corpus). Dropping a managed table also
-    * removes its warehouse files.
-    *
-    * SINGLE-WRITER CONTRACT (deliberate): the GC — both the catalog
-    * drops and the on-disk orphan sweep below — assumes the warehouse
-    * directory belongs to ONE session at a time (the in-memory-catalog
-    * deployment this library targets: each job/session owns its
-    * warehouse). In a SHARED warehouse with concurrent sessions, a
-    * session building generation N+1 would delete generation N's
-    * managed files out from under a session still reading them — a
-    * shared-catalog deployment must either give each session its own
-    * `spark.sql.warehouse.dir`, or replace this sweep with
-    * catalog-native GC (drop via the shared catalog only, no raw
-    * filesystem deletes, plus a retention grace window). */
-  def dropStaleGenerations(spark: org.apache.spark.sql.SparkSession,
-      stem: String, current: String, sep: String = "_f"): Unit = {
-    val pre = stem.toLowerCase + sep
-    val keep = current.toLowerCase
-    spark.catalog.listTables().collect().map(_.name)
-      .filter(n => n.startsWith(pre) && !n.startsWith(keep))
-      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
-    // Also sweep ORPHANED generations on disk: a fresh session starts
-    // with an empty in-memory catalog, so a previous session's
-    // superseded tables are invisible to listTables but their managed
-    // locations still occupy the warehouse. Managed-location layout is
-    // <warehouse>/<tablename> (the same path the builders pre-clear).
-    val wh = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith(pre) && !n.startsWith(keep))
-        fs.delete(st.getPath, true)
-    }
-  }
 
   /** KNN GRAPH: approximate top-k neighbors for EVERY corpus vector —
     * the all-vectors generalization of [[ivfTopK]] and the kernel

@@ -133,9 +133,10 @@ object CoreQueries {
       // orderkey-clustered, so the partial agg collapses ~4:1 before
       // the exchange the join needed anyway), then per custkey before
       // the customer join — every join input is the smallest frame
-      // that still carries the answer. The probe pair (BenchScratch
-      // q09): the raw li⨝ord SMJ alone costs ~5.6 s at sf10x — the
-      // whole query's wall — and shuffled 4× the bytes.
+      // that still carries the answer. The probe pair
+      // (OPTIMIZATION_r16.md, q09): the raw li⨝ord SMJ alone costs
+      // ~5.6 s at sf10x — the whole query's wall — and shuffled 4× the
+      // bytes.
       val la = Tables.lineitem(s, dir)
         .groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("_c"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import graft.sources.SharedTable
 
 /** The shared-table bucket sizing rule (VERDICT r15 item 7): local
   * SFs keep the r15-comparable 16-bucket layout, large corpora scale
@@ -12,21 +13,21 @@ class ShardCountSpec extends AnyFunSuite with Matchers {
   private val TB = 1L << 40
 
   test("local scale factors stay on the 16-bucket floor") {
-    TextQueries.shardCountForBytes(0L) shouldBe 16
-    TextQueries.shardCountForBytes(17 * MB) shouldBe 16 // sf0.1
-    TextQueries.shardCountForBytes(2 * GB) shouldBe 16 // sf10x
-    TextQueries.shardCountForBytes(16 * 256 * MB) shouldBe 16 // exact floor
+    SharedTable.shardCountForBytes(0L) shouldBe 16
+    SharedTable.shardCountForBytes(17 * MB) shouldBe 16 // sf0.1
+    SharedTable.shardCountForBytes(2 * GB) shouldBe 16 // sf10x
+    SharedTable.shardCountForBytes(16 * 256 * MB) shouldBe 16 // exact floor
   }
 
   test("bucket count scales with corpus bytes, power-of-two") {
     // 17 * 256 MB → ceil 17 → next pow2 = 32
-    TextQueries.shardCountForBytes(17 * 256 * MB) shouldBe 32
-    TextQueries.shardCountForBytes(100 * GB) shouldBe 512 // 400 buckets → 512
-    TextQueries.shardCountForBytes(1 * TB) shouldBe 4096
+    SharedTable.shardCountForBytes(17 * 256 * MB) shouldBe 32
+    SharedTable.shardCountForBytes(100 * GB) shouldBe 512 // 400 buckets → 512
+    SharedTable.shardCountForBytes(1 * TB) shouldBe 4096
   }
 
   test("cap holds at warehouse scale") {
-    TextQueries.shardCountForBytes(100 * TB) shouldBe 4096
-    TextQueries.shardCountForBytes(Long.MaxValue / 2) shouldBe 4096
+    SharedTable.shardCountForBytes(100 * TB) shouldBe 4096
+    SharedTable.shardCountForBytes(Long.MaxValue / 2) shouldBe 4096
   }
 }

@@ -2,18 +2,22 @@ package graft.queries
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.Similarity
+import graft.sources.SharedTable
 
 /** Session-materialized warehouse tables must key on the CORPUS, not
   * the corpus PATH (VERDICT r11 item 2): a long-lived session (or a
   * warehouse shared across sessions — exactly how bench windows
   * behave) serving a corpus regenerated in place at the same path must
   * rebuild, never silently read the previous generation's frames.
-  * The mechanism is [[Similarity.dirFingerprint]] mixed into every
-  * memoized table name, plus [[Similarity.dropStaleGenerations]] GC
-  * in the build paths. */
+  * The mechanism is [[SharedTable.dirFingerprint]] mixed into every
+  * memoized table name, plus [[SharedTable.dropStaleGenerations]] GC
+  * in the build paths. A build that fails part-way must never be
+  * served, and the lifecycle must stay in [[SharedTable]] alone. */
 class WarehouseInvalidationSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,12 +28,12 @@ class WarehouseInvalidationSpec extends SparkSpec {
   test("dirFingerprint changes when a file in the corpus is rewritten") {
     val dir = Files.createTempDirectory("graft-fp").toString
     writeDocs(dir, Seq((1L, "a b"), (2L, "b c")))
-    val fp1 = Similarity.dirFingerprint(spark, dir)
+    val fp1 = SharedTable.dirFingerprint(spark, dir)
     fp1 should fullyMatch regex "[0-9a-f]{10}"
     // Same listing → same fingerprint (pure function of the listing).
-    Similarity.dirFingerprint(spark, dir) shouldBe fp1
+    SharedTable.dirFingerprint(spark, dir) shouldBe fp1
     writeDocs(dir, Seq((1L, "a b"), (2L, "b c"), (3L, "c d plus extra")))
-    Similarity.dirFingerprint(spark, dir) should not be fp1
+    SharedTable.dirFingerprint(spark, dir) should not be fp1
   }
 
   test("regenerating the corpus at the same path rebuilds shared tables") {
@@ -39,7 +43,7 @@ class WarehouseInvalidationSpec extends SparkSpec {
     val q = graft.SparkEntry.queries("q86_bigram_lm")
     val top1 = q(spark, dir).select("bigram").as[String].head()
     top1 shouldBe "x y"
-    val gen1Tbl = Similarity.indexName(spark, "graft_bigrams", dir)
+    val gen1Tbl = SharedTable.indexName(spark, "graft_bigrams", dir)
     assert(spark.catalog.tableExists(gen1Tbl))
 
     // Generation 2: SAME PATH, different corpus — "m n" dominates.
@@ -50,7 +54,7 @@ class WarehouseInvalidationSpec extends SparkSpec {
     top2 shouldBe "m n" // stale graft_bigrams would still say "x y"
 
     // The superseded generation's table was GC'd by the rebuild.
-    val gen2Tbl = Similarity.indexName(spark, "graft_bigrams", dir)
+    val gen2Tbl = SharedTable.indexName(spark, "graft_bigrams", dir)
     gen2Tbl should not be gen1Tbl
     assert(spark.catalog.tableExists(gen2Tbl))
     assert(!spark.catalog.tableExists(gen1Tbl))
@@ -66,7 +70,7 @@ class WarehouseInvalidationSpec extends SparkSpec {
     val orphan = new org.apache.hadoop.fs.Path(wh,
       "graft_orphantest_x_f0123456789")
     fs.mkdirs(orphan)
-    Similarity.dropStaleGenerations(spark, "graft_orphantest_x",
+    SharedTable.dropStaleGenerations(spark, "graft_orphantest_x",
       "graft_orphantest_x_fabcdefabcd")
     assert(!fs.exists(orphan), "orphaned generation dir must be swept")
   }
@@ -81,13 +85,13 @@ class WarehouseInvalidationSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
     writeEmb(seed = 0, n = 24)
-    val name1 = Similarity.indexName(spark, "ivf", dir)
+    val name1 = SharedTable.indexName(spark, "ivf", dir)
     val idx1 = Similarity.indexFor(graft.Tables.embeddings(spark, dir),
       name1, nCentroids = 2, trainN = 24, iters = 1, numBuckets = 2)
     spark.table(idx1.assignedTable).count() shouldBe 24L
 
     writeEmb(seed = 5, n = 30) // regenerate in place, different count
-    val name2 = Similarity.indexName(spark, "ivf", dir)
+    val name2 = SharedTable.indexName(spark, "ivf", dir)
     name2 should not be name1
     val idx2 = Similarity.indexFor(graft.Tables.embeddings(spark, dir),
       name2, nCentroids = 2, trainN = 30, iters = 1, numBuckets = 2)
@@ -95,5 +99,74 @@ class WarehouseInvalidationSpec extends SparkSpec {
     // Old generation GC'd.
     assert(!spark.catalog.tableExists(idx1.assignedTable))
     assert(!spark.catalog.tableExists(idx1.centroidTable))
+  }
+
+  /** A frame whose write fails on one task after the others have
+    * started writing: the shape of a build that throws mid-write. */
+  private def failingFrame(n: Int) =
+    spark.range(0, n, 1, 4).select(
+      when(col("id") === n - 1, raise_error(lit("injected write failure")))
+        .otherwise(col("id")).cast("long").as("id"))
+
+  test("a single-table build that throws mid-write is not served and rebuilds") {
+    val dir = Files.createTempDirectory("graft-fail1").toString
+    writeDocs(dir, Seq((1L, "a b")))
+    val tbl = SharedTable.indexName(spark, "graft_failtest", dir)
+    intercept[Exception] {
+      SharedTable.bucketed(spark, "graft_failtest", dir, "id") {
+        failingFrame(64)
+      }
+    }
+    assert(!spark.catalog.tableExists(tbl), "a failed build must stay invisible")
+    val rebuilt = SharedTable.bucketed(spark, "graft_failtest", dir, "id") {
+      spark.range(0, 64, 1, 4).toDF("id")
+    }
+    rebuilt.as[Long].collect().sorted shouldBe (0L until 64L).toArray
+  }
+
+  test("a multi-table family that fails after its first table rebuilds in full") {
+    val dir = Files.createTempDirectory("graft-fail2").toString
+    writeDocs(dir, Seq((1L, "a b")))
+    val first = SharedTable.indexName(spark, "graft_failfam_a", dir)
+    val witness = SharedTable.indexName(spark, "graft_failfam_w", dir)
+    var builds = 0
+    def family(gen: Long, failWitness: Boolean): Unit =
+      SharedTable.materialize(spark, Seq(first, witness)) {
+        builds += 1
+        graft.sources.FileIO.writeWarehouseTable(
+          spark.range(1).select(lit(gen).as("gen")), first)
+        graft.sources.FileIO.writeWarehouseTable(
+          if (failWitness) failingFrame(64) else spark.range(64).toDF("id"),
+          witness)
+      }
+    intercept[Exception](family(gen = 1L, failWitness = true))
+    assert(spark.catalog.tableExists(first))
+    assert(!spark.catalog.tableExists(witness))
+    // The first table alone must not count as the family: the next call
+    // rebuilds both tables, replacing generation 1's first table.
+    family(gen = 2L, failWitness = false)
+    builds shouldBe 2
+    spark.table(first).as[Long].collect() shouldBe Array(2L)
+    spark.table(witness).count() shouldBe 64L
+    family(gen = 3L, failWitness = false) // served: no third build
+    builds shouldBe 2
+  }
+
+  test("only SharedTable GCs generations or touches warehouse locations") {
+    // One owner for the lifecycle policy: a hand-rolled copy at a build
+    // site would drift from it (GC, clear, witness order).
+    val banned = """dropStaleGenerations|spark\.sql\.warehouse\.dir|\.delete\(""".r
+    val root = java.nio.file.Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "SharedTable.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if banned.findFirstIn(line).isDefined =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    offenders shouldBe empty
   }
 }
